@@ -24,15 +24,15 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from geo_linked_open_data_kg_spark.fixtures.generate import synth_dir_for  # noqa: E402
-from geo_linked_open_data_kg_spark.session import get_spark  # noqa: E402
+from geo_linked_open_data_kg_spark.session import get_spark, host_cores  # noqa: E402
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", host_cores()))
     shots = int(os.environ.get("SPARK_GRAFT_BENCH_SHOTS", "3"))
     sf = os.path.basename(sf_dir.rstrip("/")).removeprefix("sf")
     synth_dir_for(sf_dir)  # ensure fixtures exist before timing

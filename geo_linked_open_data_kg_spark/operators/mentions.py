@@ -234,9 +234,13 @@ def detect_mentions(documents: DataFrame, places: DataFrame,
     # the vocabulary — the cap keeps >= 1 candidate per surface, so the
     # matched-occurrence set is cap-invariant. Semi-join dims tolerate
     # duplicate keys: the dedup-free alias stream costs zero exchanges.
+    # Alias-map sized, so broadcast under the same flag as the alias map
+    # (the linking cascade's contract, operators.linking.GazetteerDims).
     vocab = alias_map(places, dedup=False).select("alias_norm")
-    occ = grams.join(F.broadcast(vocab),
-                     grams.gram_norm == vocab.alias_norm, "left_semi")
+    if broadcast_aliases:
+        vocab = F.broadcast(vocab)
+    occ = grams.join(vocab, grams.gram_norm == vocab.alias_norm,
+                     "left_semi")
     per_span = (occ.groupBy("doc_id", "span_offset")
                 .agg(F.collect_list(
                     F.struct("start", "n", "gram")).alias("occs")))

@@ -130,20 +130,14 @@ def run_pipeline(spark: SparkSession, sf_dir: str, out_dir: str,
     # chain's tasks. FIFO scheduling keeps the first-submitted (longest)
     # chain prioritized; resume semantics are unchanged — each stage
     # still checks its own checkpoint independently.
-    from concurrent.futures import ThreadPoolExecutor
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_linked = pool.submit(_linked_chain)
-        f_gaz = pool.submit(
-            lambda: ckpt.get_or_compute(
-                spark, "gazetteer_triples", _gaz, force=force))
-        f_nodes = pool.submit(
-            lambda: ckpt.get_or_compute(
-                spark, "nodes",
-                lambda: build_nodes(places, wd, persons, orgs, post_offices),
-                partition_by=["label"], force=force))
-        linked, mention_t = f_linked.result()
-        gaz_triples = f_gaz.result()
-        nodes = f_nodes.result()
+    (linked, mention_t), gaz_triples, nodes = run_chains(spark, {
+        "linked_mentions": _linked_chain,
+        "gazetteer_triples": lambda: ckpt.get_or_compute(
+            spark, "gazetteer_triples", _gaz, force=force),
+        "nodes": lambda: ckpt.get_or_compute(
+            spark, "nodes",
+            lambda: build_nodes(places, wd, persons, orgs, post_offices),
+            partition_by=["label"], force=force)})
 
     from geo_linked_open_data_kg_spark.operators import canonicalize
 
@@ -204,6 +198,36 @@ def run_pipeline(spark: SparkSession, sf_dir: str, out_dir: str,
     return {"linked_mentions": linked, "mention_triples": mention_t,
             "gazetteer_triples": gaz_triples, "canonical_triples": canon,
             "nodes": nodes, "edges": edges}
+
+
+def run_chains(spark: SparkSession, chains: dict) -> list:
+    """Run each chain (name -> no-argument callable) on its own driver
+    thread, its Spark jobs under its own job group `<name>-<run id>`;
+    returns the results in order. Fails fast: on the first chain error
+    the sibling groups are cancelled — repeatedly until their threads
+    stop, since a sibling between two jobs submits its next one after a
+    single cancel — and that first error is re-raised."""
+    import uuid
+    from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
+    sc = spark.sparkContext
+    run = uuid.uuid4().hex[:12]
+
+    def in_group(group, chain):
+        sc.setJobGroup(group, group)
+        return chain()
+
+    with ThreadPoolExecutor(max_workers=len(chains)) as pool:
+        futures = {pool.submit(in_group, f"{name}-{run}", chain):
+                   f"{name}-{run}" for name, chain in chains.items()}
+        done, pending = wait(futures, return_when=FIRST_EXCEPTION)
+        failed = [f for f in futures if f in done and f.exception()]
+        while failed and pending:
+            for f in pending:
+                sc.cancelJobGroup(futures[f])
+            _, pending = wait(pending, timeout=0.2)
+        if failed:
+            raise failed[0].exception()
+        return [f.result() for f in futures]
 
 
 def build_nodes(places: DataFrame, wd: DataFrame, persons: DataFrame,

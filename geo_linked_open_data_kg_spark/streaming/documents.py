@@ -121,18 +121,22 @@ def stream_link_mentions(doc_stream: DataFrame, places: DataFrame,
     batch(drops) exactly; refresh the snapshot by restarting the stream
     with a re-derived stoplist when corpus drift warrants it. The
     gazetteer (`places`) is likewise a frozen dimension for the stream's
-    lifetime."""
+    lifetime: its linking dims are pinned once at stream start too, so a
+    micro-batch neither scans `places` nor re-runs the dims' shuffles."""
     from geo_linked_open_data_kg_spark.operators.linking import (
+        GazetteerDims,
         link_mentions,
     )
     _guard_fresh_checkpoint(out_path, checkpoint_dir)
-    # one eager materialization: the stoplist must not be recomputed
-    # (or worse, recomputed over a GROWN corpus) per micro-batch
+    # one eager materialization each: the stoplist must not be recomputed
+    # (or worse, recomputed over a GROWN corpus) per micro-batch, and the
+    # gazetteer dims are the same for every batch
     pinned = stop_surfaces.localCheckpoint(eager=True)
+    dims = GazetteerDims(places).pin()
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.sql import functions as F
-        (link_mentions(batch_df, places, stop_surfaces=pinned)
+        (link_mentions(batch_df, places, stop_surfaces=pinned, dims=dims)
          .withColumn("_batch_id", F.lit(batch_id))
          .write.mode("overwrite")
          .option("partitionOverwriteMode", "dynamic")

@@ -3,21 +3,17 @@ FIXTURES.md §8 golden-case checklist)."""
 
 from __future__ import annotations
 
-import sys
-
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
-
-from geo_linked_open_data_kg_spark.operators.canonicalize import (  # noqa: E402
+from geo_linked_open_data_kg_spark.operators.canonicalize import (
     connected_components,
     rewrite_triples,
 )
-from geo_linked_open_data_kg_spark.operators.direct_link import (  # noqa: E402
+from geo_linked_open_data_kg_spark.operators.direct_link import (
     direct_id_links,
 )
-from geo_linked_open_data_kg_spark.operators.spatial import (  # noqa: E402
+from geo_linked_open_data_kg_spark.operators.spatial import (
     spatial_links,
 )
 

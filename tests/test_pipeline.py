@@ -3,15 +3,12 @@
 from __future__ import annotations
 
 import shutil
-import sys
 import tempfile
 
 import pytest
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
-
-from geo_linked_open_data_kg_spark.plans.pipeline import run_pipeline  # noqa: E402
+from geo_linked_open_data_kg_spark.plans.pipeline import run_pipeline
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -86,6 +83,44 @@ def test_metrics_and_lineage_written(spark, out_dir):
     lin = spark.read.parquet(f"{out_dir}/_lineage/gazetteer_triples")
     assert lin.agg(F.sum("n_rows")).collect()[0][0] == \
         spark.read.parquet(f"{out_dir}/gazetteer_triples").count()
+
+
+def _compiled_classes(spark) -> int:
+    """Classes Spark's code generator has compiled in this JVM."""
+    cm = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return cm.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_warm_build_reuses_generated_code(spark, tmp_path):
+    """A build compiles a few hundred distinct generated classes — more
+    than Spark's default 100-entry codegen cache holds, which evicted
+    every class before the next build could reuse it. With the session's
+    cache sized above that working set, a second build into a fresh
+    directory compiles almost nothing."""
+    run_pipeline(spark, SF_DIR, str(tmp_path / "first"))
+    before = _compiled_classes(spark)
+    run_pipeline(spark, SF_DIR, str(tmp_path / "second"))
+    recompiled = _compiled_classes(spark) - before
+    assert recompiled < 100, f"warm build recompiled {recompiled} classes"
+
+
+def test_chain_failure_fails_fast(spark, tmp_path, monkeypatch):
+    """A failing stage chain cancels its sibling chains' jobs at once and
+    its own error surfaces: the mention cascade, which runs far longer
+    than the failing nodes chain, never completes its checkpoint."""
+    from geo_linked_open_data_kg_spark.plans import pipeline
+
+    class NodesFailed(RuntimeError):
+        pass
+
+    def fail(*_args, **_kwargs):
+        raise NodesFailed("build_nodes failed")
+
+    monkeypatch.setattr(pipeline, "build_nodes", fail)
+    out = tmp_path / "failed"
+    with pytest.raises(NodesFailed):
+        run_pipeline(spark, SF_DIR, str(out))
+    assert not (out / "linked_mentions" / "_SUCCESS").exists()
 
 
 def test_merge_upsert_incremental_document_update(spark):

@@ -5,13 +5,10 @@ output so refactors can't silently regress them."""
 from __future__ import annotations
 
 import re
-import sys
 
-sys.path.insert(0, "/root/repo")
+import pytest
 
-import pytest  # noqa: E402
-
-from geo_linked_open_data_kg_spark import queries as q  # noqa: E402
+from geo_linked_open_data_kg_spark import queries as q
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -108,6 +105,35 @@ def test_clustered_cascade_exchange_budget(spark):
     keys = re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan)
     assert not any(k.count(",") == 1 and k.startswith("doc_id") for k in keys), \
         f"corpus re-shuffled by doc_id alone: {keys}"
+
+
+def test_pinned_dims_plan_never_scans_gazetteer(spark):
+    """A stream pins the gazetteer dims once (GazetteerDims.pin) next to
+    its stoplist: a micro-batch's cascade plan then reads no `places`
+    file and re-runs none of the dims' shuffles."""
+    from geo_linked_open_data_kg_spark.operators.linking import (
+        GazetteerDims,
+        link_mentions,
+        snapshot_stop_surfaces,
+    )
+    from geo_linked_open_data_kg_spark.sources.registry import load
+    docs = load(spark, SF_DIR, "geo_documents")
+    places = load(spark, SF_DIR, "places")
+    stop = snapshot_stop_surfaces(docs, places).localCheckpoint(eager=True)
+    unpinned = _plan(link_mentions(docs, places, stop_surfaces=stop))
+    pinned = _plan(link_mentions(docs, places, stop_surfaces=stop,
+                                 dims=GazetteerDims(places).pin()))
+
+    def place_scans(plan):
+        # only places has an alternate_names or a population column
+        return [s for s in re.findall(r"FileScan [^\n]*", plan)
+                if "alternate_names" in s or "population" in s]
+
+    def n_ex(plan):
+        return len(re.findall(r"Exchange hashpartitioning", plan))
+    assert place_scans(unpinned), "unpinned plan should scan places"
+    assert not place_scans(pinned), place_scans(pinned)
+    assert n_ex(pinned) < n_ex(unpinned), (n_ex(pinned), n_ex(unpinned))
 
 
 def test_spatial_join_hot_cell_skew_split(spark):
